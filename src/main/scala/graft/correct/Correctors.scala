@@ -14,16 +14,19 @@ import org.apache.spark.sql.functions._
   * error-cell relation against a counts model that has already been
   * reduced by `groupBy().count()` — the count models are broadcast-
   * joined, the big table is scanned once per model build, and nothing
-  * ever iterates cells on the driver.
+  * ever iterates cells on the driver. The FD and vicinity-1 correctors
+  * share one model, the order-1 pair counts (`allCounts`), and one
+  * lookup into it (`pairCorrectors`).
   */
 object Correctors {
 
   /** FD corrector (reference `fd_based_corrector`, `src/pdep.py:398-447`,
-    * feature = norm_gpdep): for each FD whose rhs is the error column,
-    * look up the error row's lhs values in the masked conditional-count
-    * model and emit every co-occurring rhs value, scored by the FD's
-    * norm_gpdep; scores for the same candidate from different FDs sum
-    * (A10).
+    * feature = norm_gpdep): for each order-1 FD whose rhs is the error
+    * column, look up the error row's lhs value in the masked
+    * conditional-count model and emit every co-occurring rhs value,
+    * scored by the FD's norm_gpdep; scores for the same candidate from
+    * different FDs sum (A10). The lookup is `pairCorrectors`' over the
+    * pair counts of the FDs' columns.
     */
   def fdCorrector(
       df: DataFrame,
@@ -32,38 +35,10 @@ object Correctors {
       gpdeps: Map[String, (PdepStats, Double)],
       fds: Seq[Fd]
   ): DataFrame = {
-    val spark = df.sparkSession
-    val perFd: Seq[DataFrame] = fds.flatMap { fd =>
-      val normGpdep = gpdeps.get(fd.key).map(_._2).getOrElse(0.0)
-      val errRowIds = errors
-        .filter(col("col") === fd.rhs)
-        .select(col("row_id").as(rowId))
-      if (fd.lhs.contains(fd.rhs)) None
-      else {
-        val errRows = df
-          .join(errRowIds, Seq(rowId))
-          .select(col(rowId).as("row_id") +: fd.lhs.map(col): _*)
-        val counts = Pdep
-          .fdCounts(df, errors, rowId, fd)
-          .withColumnRenamed(fd.rhs, "candidate")
-        val sugg = errRows
-          .join(broadcast(counts.drop("lhs_cnt")), fd.lhs)
-          .select(
-            col("row_id"),
-            lit(fd.rhs).as("col"),
-            lit("fd").as("corrector"),
-            col("candidate"),
-            lit(normGpdep).as("score")
-          )
-        Some(sugg)
-      }
-    }
-    if (perFd.isEmpty) emptySuggestions(spark)
-    else
-      perFd
-        .reduce(_ unionByName _)
-        .groupBy("row_id", "col", "corrector", "candidate")
-        .agg(sum("score").as("score"))
+    require(fds.forall(_.lhs.size == 1), s"fdCorrector takes order-1 FDs; got ${fds.map(_.key).mkString(", ")}")
+    val cols = fds.flatMap(_.cols).distinct
+    val scored = fds.distinct.map(fd => fd -> gpdeps.get(fd.key).fold(0.0)(_._2))
+    pairCorrectors(df, errors, rowId, cols, allCounts(df, errors, rowId, cols), scored, vicinity1 = false)
   }
 
   /** Naive vicinity corrector, order 1 (reference
@@ -72,40 +47,74 @@ object Correctors {
     * of each rhs candidate given the row's L-value, from cell-masked
     * co-occurrence counts (`mine_all_counts`, `src/pdep.py:101-158`).
     * One feature (corrector name) per lhs column.
-    *
-    * Count model: the long cell relation self-joined on row_id — one
-    * shuffle by row_id, one aggregation; cells marked as errors are
-    * excluded from the model (cell-level masking).
     */
   def vicinityCorrectorOrder1(
       df: DataFrame,
       errors: DataFrame,
       rowId: String,
       cols: Seq[String]
+  ): DataFrame =
+    pairCorrectors(df, errors, rowId, cols, allCounts(df, errors, rowId, cols), Nil, vicinity1 = true)
+
+  /** The FD and vicinity-1 correctors from ONE error-cell lookup into
+    * the order-1 pair counts (`allCounts`). The reference masks an FD
+    * `lhs -> rhs` by rows with an error in {lhs, rhs}: exactly the
+    * cell-level masking of the (lhs, rhs) pair. So the FD's suggestion
+    * is the vicinity-1 lookup row for (lhs_col = lhs, rhs_col = rhs),
+    * scored by the FD's norm_gpdep (`fdScores`, summed per candidate
+    * across FDs) instead of `pr`. Each error cell pairs with its row's
+    * other cells — current values, errors included (the reference's
+    * `ed["vicinity"]` is the raw row); only the (pair, lhs value) groups
+    * those cells look up leave the model, each whole, so `pr` stays
+    * exact while the window and the join see error-sized relations.
+    */
+  def pairCorrectors(
+      df: DataFrame,
+      errors: DataFrame,
+      rowId: String,
+      cols: Seq[String],
+      pairCounts: DataFrame,
+      fdScores: Seq[(Fd, Double)],
+      vicinity1: Boolean
   ): DataFrame = {
-    val cells = Cells.melt(df, rowId, cols)
-    val counts = allCounts(df, errors, rowId, cols)
-    val wm = Window.partitionBy("lhs_col", "rhs_col", "lhs_val")
-    val countsPr = counts.withColumn("pr", col("cnt") / sum("cnt").over(wm))
-
-    // error cells paired with their row's other (lhs) cells — current
-    // values, errors included (the reference's `ed["vicinity"]` is the
-    // raw row)
-    val errLhs = errors
-      .select(col("row_id"), col("col").as("rhs_col"))
-      .join(cells.withColumnRenamed("col", "lhs_col").withColumnRenamed("value", "lhs_val"), "row_id")
-      .filter(col("lhs_col") =!= col("rhs_col"))
-
-    errLhs
-      .join(broadcast(countsPr), Seq("lhs_col", "rhs_col", "lhs_val"))
-      .select(
-        col("row_id"),
-        col("rhs_col").as("col"),
-        concat(lit("vicinity_1_"), col("lhs_col")).as("corrector"),
-        col("candidate"),
-        col("pr").as("score")
-      )
+    val spark = df.sparkSession
+    import spark.implicits._
+    val fdModel = fdScores.map { case (fd, s) => (fd.lhs.head, fd.rhs, s) }.toDF("lhs_col", "rhs_col", "fd_score")
+    val lookup = errorVicinity(df, errors, rowId, cols)
+    val keys = Seq("lhs_col", "rhs_col", "lhs_val")
+    val model = withPr(
+      pairCounts
+        .join(broadcast(lookup.select(keys.map(col): _*)), keys, "left_semi")
+        .join(broadcast(fdModel), Seq("lhs_col", "rhs_col"), if (vicinity1) "left" else "inner")
+    )
+    val hits = model.join(broadcast(lookup), keys)
+    val fd = hits
+      .filter(col("fd_score").isNotNull)
+      .groupBy(col("row_id"), col("rhs_col").as("col"), lit("fd").as("corrector"), col("candidate"))
+      .agg(sum("fd_score").as("score"))
+    val vicinity = hits.select(
+      col("row_id"),
+      col("rhs_col").as("col"),
+      concat(lit("vicinity_1_"), col("lhs_col")).as("corrector"),
+      col("candidate"),
+      col("pr").as("score")
+    )
+    Seq(fd -> fdScores.nonEmpty, vicinity -> vicinity1)
+      .collect { case (sugg, true) => sugg }
+      .reduceOption(_ unionByName _)
+      .getOrElse(emptySuggestions(spark))
   }
+
+  /** Conditional probability `pr` of each candidate per lhs value. */
+  private def withPr(pairCounts: DataFrame): DataFrame =
+    pairCounts.withColumn("pr", col("cnt") / sum("cnt").over(Window.partitionBy("lhs_col", "rhs_col", "lhs_val")))
+
+  /** Error cells `(row_id, rhs_col)` with their row's other cells. */
+  private def errorVicinity(df: DataFrame, errors: DataFrame, rowId: String, cols: Seq[String]): DataFrame =
+    errors
+      .select(col("row_id"), col("col").as("rhs_col"))
+      .join(Cells.melt(df, rowId, cols).toDF("row_id", "lhs_col", "lhs_val"), "row_id")
+      .filter(col("lhs_col") =!= col("rhs_col"))
 
   /** Pdep-ranked vicinity corrector, order 1 (reference M4,
     * `src/pdep.py:450-499`): like the naive vicinity corrector but
@@ -113,7 +122,8 @@ object Correctors {
     * gpdep descending (W3 top-k; deterministic lhs tie-break), and the
     * emitted feature is the conditional probability of the candidate
     * (the reference's default `pdep_features=['pr']`). One corrector
-    * name per surviving (lhs -> rhs) dependency.
+    * name per surviving (lhs -> rhs) dependency. The gpdep ranking and
+    * the lookup read the same pair counts.
     */
   def vicinityCorrectorPdep(
       df: DataFrame,
@@ -125,7 +135,8 @@ object Correctors {
     val errorCols = errors.select("col").distinct().collect().map(_.getString(0)).toSeq.sorted
     val fds = for { rhs <- errorCols; lhs <- cols if lhs != rhs } yield Fd(Seq(lhs), rhs)
     if (fds.isEmpty) return emptySuggestions(df.sparkSession)
-    val gp = Pdep.gpdepTable(df, errors, rowId, fds)
+    val counts = allCounts(df, errors, rowId, cols)
+    val gp = Pdep.gpdepTable(counts, fds)
     val surviving: Set[String] = gp.toSeq
       .groupBy(_._2._1.fd.rhs)
       .flatMap { case (_, deps) =>
@@ -136,19 +147,9 @@ object Correctors {
       }
       .toSet
 
-    val cells = Cells.melt(df, rowId, cols)
-    val counts = allCounts(df, errors, rowId, cols)
-    val wm = Window.partitionBy("lhs_col", "rhs_col", "lhs_val")
-    val countsPr = counts.withColumn("pr", col("cnt") / sum("cnt").over(wm))
-    val errLhs = errors
-      .select(col("row_id"), col("col").as("rhs_col"))
-      .join(cells.withColumnRenamed("col", "lhs_col").withColumnRenamed("value", "lhs_val"), "row_id")
-      .filter(col("lhs_col") =!= col("rhs_col"))
-      .filter(
-        concat(col("lhs_col"), lit("->"), col("rhs_col")).isin(surviving.toSeq: _*)
-      )
-    errLhs
-      .join(broadcast(countsPr), Seq("lhs_col", "rhs_col", "lhs_val"))
+    errorVicinity(df, errors, rowId, cols)
+      .filter(concat(col("lhs_col"), lit("->"), col("rhs_col")).isin(surviving.toSeq: _*))
+      .join(broadcast(withPr(counts)), Seq("lhs_col", "rhs_col", "lhs_val"))
       .select(
         col("row_id"),
         col("rhs_col").as("col"),
@@ -506,12 +507,7 @@ object Correctors {
     decideBy(suggestions, Seq("row_id", "col"))
       .select(col("row_id"), col("col"), col("candidate").as("value"))
 
-  /** A13 generalized over arbitrary key columns. When every cell with
-    * the same lhs value receives identical suggestions (single-FD
-    * correction), deciding once per lhs value and broadcast-joining
-    * back is equivalent and avoids the per-cell window — that is the
-    * scale path used by the pages pipeline.
-    */
+  /** A13 generalized over arbitrary key columns. */
   def decideBy(suggestions: DataFrame, keys: Seq[String]): DataFrame = {
     val summed = suggestions
       .groupBy((keys :+ "candidate").map(col): _*)

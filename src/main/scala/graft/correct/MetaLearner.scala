@@ -166,7 +166,8 @@ object MetaLearner {
     * predictions — the reference's exact `scoring="precision"`
     * criterion, so model selection matches it when the two metrics
     * disagree. Both are guarded like the reference: too few positives
-    * (<= 2) falls back to the plain model, as do degenerate folds.
+    * (<= 2) falls back to the plain model, as do degenerate folds
+    * (`unlessDegenerateFolds`).
     */
   private def fitClassifier(
       train: DataFrame,
@@ -232,9 +233,32 @@ object MetaLearner {
         // seed, fixed fold hash, argmax selection order preserved)
         .setParallelism(18)
         .setSeed(seed)
-      try cv.fit(foldTrain).bestModel.asInstanceOf[org.apache.spark.ml.classification.GBTClassificationModel]
-      catch { case _: Exception => gbt.fit(train) }
+      try
+        unlessDegenerateFolds(classifier, foldTrain, 3)(
+          cv.fit(foldTrain).bestModel.asInstanceOf[org.apache.spark.ml.classification.GBTClassificationModel]
+        )(gbt.fit(train))
       finally foldTrain.unpersist()
+    }
+  }
+
+  /** The CV failures `fitClassifier` absorbs, checked up front on
+    * `folds` (`label`, `__fold`): a fold with no rows (`CrossValidator`
+    * rejects an empty validation fold), and under CV_PRECISION a
+    * validation fold without a positive label (`precisionByLabel(1.0)`
+    * is undefined there; `MulticlassMetrics` throws). Such folds fall
+    * back to the plain fit, with a warning; any failure of `cv` itself
+    * propagates.
+    */
+  private[correct] def unlessDegenerateFolds[M](classifier: String, folds: DataFrame, numFolds: Int)(cv: => M)(
+      plain: => M
+  ): M = {
+    val hasPositive =
+      folds.groupBy("__fold").agg(max(col("label") === 1.0)).collect().map(r => r.getInt(0) -> r.getBoolean(1))
+    if (hasPositive.length == numFolds && (classifier != "CV_PRECISION" || hasPositive.forall(_._2))) cv
+    else {
+      val log = org.slf4j.LoggerFactory.getLogger(getClass)
+      log.warn(s"$classifier: degenerate folds ${hasPositive.sorted.mkString(" ")}; fitting without cross-validation")
+      plain
     }
   }
 

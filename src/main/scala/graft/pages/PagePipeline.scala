@@ -1,6 +1,5 @@
 package graft.pages
 
-import graft.correct.{Cells, Correctors, Fd, Pdep}
 import graft.rollup.Rollup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -16,21 +15,17 @@ import org.apache.spark.sql.functions._
   *    (whole-cell replacement with an observed value only — the
   *    per-url byte-identity invariant holds by construction);
   *  - `warc_ts`: re-parsed from the html header comment;
-  *  - `lang`: FD corrector over domain->lang (gpdep-weighted count
-  *    model, A13 decision applied once per lhs value — see
-  *    `Correctors.decideBy`).
+  *  - `lang`: the FD corrector over domain->lang, which here reduces
+  *    to the domain's majority lang: detection masks exactly the
+  *    non-majority cells, so the masked count model keeps one
+  *    candidate per domain and the A13 decision always picks it.
   *
   * Scan discipline (the property that matters at 10^12 rows): the big
   * table is scanned exactly TWICE end to end —
   *   1. one domain->lang count model (a single hash aggregate, tiny
-  *      result) from which BOTH the majority-lang model and the
-  *      masked FD-corrector counts derive: the cells masked by
-  *      detection are exactly the non-majority rows, so the masked
-  *      count relation is the counts filtered to each domain's
-  *      majority lang — no second scan needed;
+  *      result) from which the majority-lang model derives;
   *   2. the single output pass that flags + repairs every cell with
-  *      pure expressions and two broadcast joins (majority model,
-  *      per-domain decision).
+  *      pure expressions and one broadcast join (majority model).
   * Everything else operates on error-fraction-sized or
   * model-sized relations.
   */
@@ -42,12 +37,11 @@ object PagePipeline {
       .withColumn("__text_bad", col("text") === "" && length(col("html")) > 0)
       .withColumn("__lang_bad", col("lang") =!= col("__majority_lang"))
 
-  /** Domain-majority lang model: one aggregate + per-domain argmax
-    * with lexicographic tie-break (tiny relation, broadcast by
-    * callers).
+  /** Domain-majority lang model from a (domain, lang, cnt) count
+    * model: per-domain argmax with lexicographic tie-break (tiny
+    * relation, broadcast by callers).
     */
-  def majorityLang(withDomain: DataFrame): DataFrame = {
-    val counts = withDomain.groupBy("domain", "lang").agg(count(lit(1)).as("cnt"))
+  private def majorityLang(counts: DataFrame): DataFrame = {
     val w = Window.partitionBy("domain").orderBy(col("cnt").desc, col("lang").asc)
     counts
       .withColumn("rn", row_number().over(w))
@@ -67,8 +61,7 @@ object PagePipeline {
     *  - lang differing from its domain's majority lang -> mislabel.
     */
   def detectErrors(pages: DataFrame): DataFrame = {
-    val withId = withIdDomain(pages)
-    val flagged = flagCols(withId.join(broadcast(majorityLang(withId)), "domain"))
+    val flagged = flagCols(withIdDomain(pages).join(broadcast(majorityLang(langCounts(pages))), "domain"))
     flagged
       .select(
         col("row_id"),
@@ -109,62 +102,22 @@ object PagePipeline {
     * to that subset — the exactness contract incremental tier updates
     * rely on.
     */
-  def repairWithCounts(pages: DataFrame, counts0: DataFrame): DataFrame = {
-    val withId = withIdDomain(pages)
-    val langCounts = counts0.cache()
-    val w = Window.partitionBy("domain").orderBy(col("cnt").desc, col("lang").asc)
-    val majority = broadcast(
-      langCounts
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("domain"), col("lang").as("__majority_lang"))
-    )
-    val flagged = flagCols(withId.join(majority, "domain"))
+  def repairWithCounts(pages: DataFrame, counts: DataFrame): DataFrame = {
+    val flagged = flagCols(withIdDomain(pages).join(broadcast(majorityLang(counts)), "domain"))
 
-    // FD corrector model for lang (domain -> lang), masked at row
-    // level over the FD's columns exactly like Pdep.fdCounts. The
-    // masked rows are precisely those whose lang differs from the
-    // domain majority, so the masked count model IS the count relation
-    // restricted to each domain's majority lang — derived from the
-    // same scan, not a second one.
-    val fd = Fd(Seq("domain"), "lang")
-    val counts = langCounts
-      .join(majority, "domain")
-      .filter(col("lang") === col("__majority_lang"))
-      .select(col("domain"), col("lang"), col("cnt"))
-      .withColumn("lhs_cnt", sum(col("cnt")).over(Window.partitionBy("domain")))
-      .cache()
-    val stats = Pdep.statsFromCounts(counts, fd)
-    // single FD: norm_gpdep = 1 when gpdep > 0 (normalized over itself)
-    val normGpdep = stats.gpdep.map(g => if (g > 0) 1.0 else 0.0).getOrElse(0.0)
-
-    // per-lhs-value decision (equivalent to per-cell A13 here — every
-    // error cell of a domain sees identical suggestions)
-    val sugg = counts.select(
-      col("domain"),
-      col("lang").as("candidate"),
-      lit(normGpdep).as("score")
-    )
-    val decided = Correctors
-      .decideBy(sugg, Seq("domain"))
-      .select(col("domain"), col("candidate").as("__lang_fix"))
-
-    // single output pass: pure-expression repairs + broadcast join
+    // single output pass: pure-expression repairs + one broadcast join
     val htmlStr = decode(col("html"), "UTF-8")
-    flagged
-      .join(broadcast(decided), Seq("domain"), "left")
-      .select(
-        col("url"),
-        when(
-          col("__ts_bad"),
-          timestamp_seconds(regexp_extract(htmlStr, "<!--warc_ts:(\\d+)-->", 1).cast("long"))
-        ).otherwise(col("warc_ts")).as("warc_ts"),
-        col("html"),
-        when(col("__text_bad"), regexp_extract(htmlStr, "(?s)<body>(.*)</body>", 1))
-          .otherwise(col("text")).as("text"),
-        when(col("__lang_bad") && col("__lang_fix").isNotNull, col("__lang_fix"))
-          .otherwise(col("lang")).as("lang")
-      )
+    flagged.select(
+      col("url"),
+      when(
+        col("__ts_bad"),
+        timestamp_seconds(regexp_extract(htmlStr, "<!--warc_ts:(\\d+)-->", 1).cast("long"))
+      ).otherwise(col("warc_ts")).as("warc_ts"),
+      col("html"),
+      when(col("__text_bad"), regexp_extract(htmlStr, "(?s)<body>(.*)</body>", 1))
+        .otherwise(col("text")).as("text"),
+      when(col("__lang_bad"), col("__majority_lang")).otherwise(col("lang")).as("lang")
+    )
   }
 
   /** Corrected pages -> hourly tier keyed by domain, with point count,

@@ -2,6 +2,7 @@ package graft
 
 import graft.snapshot.{ContinuousRollup, SnapshotStore}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionProbe
 
 /** End-to-end driver contract: ingest snapshots, fold them into the
   * tiers with repair-before-aggregate, resume idempotently, repair the
@@ -40,5 +41,17 @@ class MainSpec extends SparkSpec {
     assert(rep.filter(col("text") === "" && length(col("html")) > 0).count() == 0L)
 
     assert(spark.read.parquet(s"$base/metrics").count() == 2L)
+  }
+
+  test("Main job=update leaves nothing cached") {
+    val base = "/tmp/graft_test_main_cache"
+    val root = s"$base/src"
+    SnapshotStore.deleteRecursively(base)
+    spark // materialize the shared session so Main reuses it
+    Main.main(Array("job=ingest", s"root=$root", "pages=1000", "domains=5"))
+    val before = SessionProbe.cachedFrames(spark)
+    Main.main(Array("job=update", s"root=$root", s"tiers=$base/tiers"))
+    assert(ContinuousRollup.lastApplied(s"$base/tiers") == 1L)
+    assert(SessionProbe.cachedFrames(spark) == before)
   }
 }

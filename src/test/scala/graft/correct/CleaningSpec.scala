@@ -1,8 +1,11 @@
 package graft.correct
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionProbe
+import org.apache.spark.storage.StorageLevel
 
 /** E2E lifecycle on the reference's own debug fixtures
   * (`datasets/debug`, `datasets/toy` — FIXTURES.md §2): perfect-oracle
@@ -56,23 +59,27 @@ class CleaningSpec extends SparkSpec {
     assert(repaired.except(clean).isEmpty && clean.except(repaired).isEmpty)
   }
 
-  test("synthetic tuples ride the lifecycle: no synth-cell output, repairs intact") {
-    // a larger Tier->Sagt FD table so synthetic rows exist to draw
-    // from; the meta-learner with synthetic training pairs must still
-    // repair the real errors and must never emit corrections for the
-    // synthetic cells themselves
-    val cols = Seq("Tier", "Sagt")
+  // a larger Tier->Sagt FD table, every 10th Sagt blanked, three of
+  // those labeled: synthetic rows exist to draw from
+  private val animalCols = Seq("Tier", "Sagt")
+  private lazy val animalClean = {
     val animals = Seq("Hund" -> "wau", "Katze" -> "miau", "Kuh" -> "muh")
-    val clean = (1L to 60L)
+    (1L to 60L)
       .map(i => (i, animals((i % 3).toInt)._1, animals((i % 3).toInt)._2))
-      .toDF("row_id" +: cols: _*)
-    val dirty = clean
-      .withColumn("Sagt", when(col("row_id") % 10 === 2, lit("?")).otherwise(col("Sagt")))
+      .toDF("row_id" +: animalCols: _*)
+  }
+  private lazy val animalDirty = animalClean
+    .withColumn("Sagt", when(col("row_id") % 10 === 2, lit("?")).otherwise(col("Sagt")))
+  private lazy val animalLabels = animalClean
+    .filter(col("row_id") % 10 === 2 && col("row_id") <= 22)
+    .select(col("row_id"), lit("Sagt").as("col"), col("Sagt").as("clean_value"))
 
+  test("synthetic tuples ride the lifecycle: no synth-cell output, repairs intact") {
+    // the meta-learner with synthetic training pairs must still repair
+    // the real errors and must never emit corrections for the
+    // synthetic cells themselves
+    val (cols, clean, dirty, labels) = (animalCols, animalClean, animalDirty, animalLabels)
     val detected = detect(dirty, clean, cols)
-    val labels = clean
-      .filter(col("row_id") % 10 === 2 && col("row_id") <= 22)
-      .select(col("row_id"), lit("Sagt").as("col"), col("Sagt").as("clean_value"))
 
     val cfg = CleaningConfig(useMetaLearner = true, metaMinLabels = 4, synthTuples = 10)
     val corrections = Cleaning.run(dirty, "row_id", cols, detected, labels, cfg).cache()
@@ -135,5 +142,37 @@ class CleaningSpec extends SparkSpec {
     val m = Correctors.evaluate(corrections, actualErrors(dirty, clean, cols))
     assert(m("ed_p") == 1.0)
     assert(m("ec_p") * corrections.count() == 3.0)
+  }
+
+  test("Cleaning.run caches only its result and names its jobs by phase, default and meta-learner paths") {
+    val detected = detect(animalDirty, animalClean, animalCols)
+
+    val sc = spark.sparkContext
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).foreach(descriptions.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      // 12 synthetic tuples: not the plan the synth case above leaves cached
+      for (cfg <- Seq(CleaningConfig(), CleaningConfig(useMetaLearner = true, metaMinLabels = 4, synthTuples = 12))) {
+        sc.setJobDescription("caller")
+        val before = SessionProbe.cachedFrames(spark)
+        val out = Cleaning.run(animalDirty, "row_id", animalCols, detected, animalLabels, cfg)
+        assert(sc.getLocalProperty("spark.job.description") == "caller", s"caller description lost ($cfg)")
+        assert(out.storageLevel != StorageLevel.NONE)
+        assert(SessionProbe.cachedFrames(spark) == before + 1, s"working frames left cached ($cfg)")
+        out.unpersist(blocking = true)
+        assert(SessionProbe.cachedFrames(spark) == before)
+      }
+    } finally {
+      sc.setJobDescription(null)
+      SessionProbe.drainListenerBus(spark)
+      sc.removeSparkListener(listener)
+    }
+    val seen = descriptions.toArray.map(_.toString).toSet
+    val phases = Set("value models", "pair counts", "fd stats", "suggestions", "decide").map("Cleaning.run: " + _)
+    assert(phases.subsetOf(seen), s"job descriptions seen: $seen")
   }
 }

@@ -212,6 +212,60 @@ class EnsembleSpec extends SparkSpec {
     assert((21L to 30L).forall(r => out(r) == s"T$r"))
   }
 
+  test("CV falls back to the plain fit only on degenerate folds; other CV failures surface") {
+    val folds = Seq((0, 1.0), (0, 0.0), (1, 1.0), (1, 0.0), (2, 1.0), (2, 0.0)).toDF("__fold", "label")
+    val noPositiveIn2 = folds.filter(!(col("__fold") === 2 && col("label") === 1.0))
+    val emptyFold2 = folds.filter(col("__fold") =!= 2)
+    def fit(classifier: String, f: org.apache.spark.sql.DataFrame) =
+      MetaLearner.unlessDegenerateFolds(classifier, f, 3)("cv")("plain")
+    assert(fit("CV", folds) == "cv" && fit("CV_PRECISION", folds) == "cv")
+    // precision of the positive label is undefined on a fold without one;
+    // areaUnderPR still scores it
+    assert(fit("CV_PRECISION", noPositiveIn2) == "plain")
+    assert(fit("CV", noPositiveIn2) == "cv")
+    // an empty fold can be scored by neither
+    assert(fit("CV", emptyFold2) == "plain" && fit("CV_PRECISION", emptyFold2) == "plain")
+    // a CV failure on sound folds propagates instead of being replaced
+    val e = intercept[IllegalStateException](
+      MetaLearner.unlessDegenerateFolds[String]("CV", folds, 3)(throw new IllegalStateException("boom"))(
+        fail("the plain fit must not run")
+      )
+    )
+    assert(e.getMessage == "boom")
+  }
+
+  test("CV_PRECISION with a validation fold lacking positives decides through the plain fit") {
+    // label only rows whose true pair hashes outside fold 2 (the
+    // meta-learner's fold hash), so fold 2 holds no positive pair
+    val fold = pmod(xxhash64(col("row_id"), col("candidate"), lit(42L)), lit(3))
+    val labeledRows = (1L to 200L)
+      .map(r => (r, s"T$r"))
+      .toDF("row_id", "candidate")
+      .filter(fold =!= 2)
+      .orderBy("row_id")
+      .limit(20)
+      .select("row_id")
+      .as[Long]
+      .collect()
+      .toSeq
+    val unlabeledRows = (1001L to 1010L)
+    val sugg = (labeledRows ++ unlabeledRows).flatMap { r =>
+      Seq(
+        Suggestion(r, "seg", "c_good", s"T$r", 0.9),
+        Suggestion(r, "seg", "c_bad", s"F$r", 0.9)
+      )
+    }.toDF()
+    val features = MetaLearner.pairFeatures(sugg, Seq("c_bad", "c_good"))
+    val labeled = labeledRows.map(r => (r, "seg", s"T$r")).toDF("row_id", "col", "clean_value")
+    val out = MetaLearner
+      .trainPredict(features, Seq("c_bad", "c_good"), labeled, minLabels = 10, classifier = "CV_PRECISION")
+      .collect()
+      .map(r => (r.getLong(0), r.getString(2)))
+      .toMap
+    assert(out.keySet == unlabeledRows.toSet)
+    assert(unlabeledRows.forall(r => out(r) == s"T$r"))
+  }
+
   test("meta-learner falls back to A13 under the label-count guard") {
     val sugg = (1L to 5L).flatMap { r =>
       Seq(

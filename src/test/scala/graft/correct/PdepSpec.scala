@@ -1,6 +1,7 @@
 package graft.correct
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions._
 
 /** Golden values from the reference's only automated test module,
   * `src/test_pdep.py` (people 7-row table, small 4-row table with
@@ -106,5 +107,102 @@ class PdepSpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     assert(out.toSeq == Seq((1L, "a", "X"), (2L, "B", "y")))
+  }
+
+  // one-pass gpdep fixture: null lhs values (a), a column fully masked
+  // by errors (m), a constant column (k), and two FDs into c
+  private lazy val gp7 = Seq[(Long, String, String, String, String, String)](
+    (1L, "x", "p", "u", "K", "z"),
+    (2L, "x", "p", "u", "K", "z"),
+    (3L, null, "q", "u", "K", "z"),
+    (4L, null, "q", "v", "K", "z"),
+    (5L, "y", "q", "v", "K", "z"),
+    (6L, "y", "r", "BAD", "K", "z"),
+    (7L, "x", "q", "BAD2", "K", "z")
+  ).toDF("row_id", "a", "b", "c", "k", "m")
+  private lazy val gp7Errors =
+    (Seq(ErrorCell(6L, "c", "BAD"), ErrorCell(7L, "c", "BAD2")) ++ (1L to 7L).map(r => ErrorCell(r, "m", "z"))).toDF()
+  private val gp7Fds = Seq(Fd(Seq("a"), "c"), Fd(Seq("b"), "c"), Fd(Seq("a"), "k"), Fd(Seq("a"), "m"))
+
+  test("one-pass gpdep: null lhs, fully masked FD, constant rhs, per-rhs normalization") {
+    // rows 6 and 7 are masked for every FD into c. a -> c: counts
+    // (x,u)=2 (null,u)=1 (null,v)=1 (y,v)=1, N=5, dA=3 (null counts):
+    //   pdep(c) = (3^2+2^2)/25 = 0.52, pdep(a,c) = (4/2+1/2+1/2+1/1)/5 = 0.8,
+    //   E = 0.52 + 2/4*0.48 = 0.76, gpdep = 0.04
+    // b -> c: (p,u)=2 (q,u)=1 (q,v)=2, N=5, dA=2:
+    //   pdep(b,c) = (4/2+1/3+4/3)/5 = 11/15, E = 0.52 + 1/4*0.48 = 0.64,
+    //   gpdep = 11/15-0.64; norm over rhs c: 0.04/(2/15) = 0.3 and 0.7
+    // a -> k: constant rhs, N=7, pdep(k) = 1 -> E and gpdep None
+    // a -> m: every m cell is an error -> N=0, all None
+    val gp = Pdep.gpdepTable(gp7, gp7Errors, "row_id", gp7Fds)
+    def close(got: Option[Double], want: Double) = got.exists(g => math.abs(g - want) < 1e-12)
+    val (ac, acNorm) = gp("a->c")
+    assert(ac.n == 5L && close(ac.pdepB, 0.52) && close(ac.pdepAB, 0.8) && close(ac.epdep, 0.76))
+    assert(close(ac.gpdep, 0.04) && math.abs(acNorm - 0.3) < 1e-12)
+    val (bc, bcNorm) = gp("b->c")
+    assert(bc.n == 5L && close(bc.pdepB, 0.52) && close(bc.pdepAB, 11.0 / 15) && close(bc.epdep, 0.64))
+    assert(close(bc.gpdep, 11.0 / 15 - 0.64) && math.abs(bcNorm - 0.7) < 1e-12)
+    val (ak, akNorm) = gp("a->k")
+    assert(ak.n == 7L && close(ak.pdepB, 1.0) && close(ak.pdepAB, 1.0) && ak.epdep.isEmpty && ak.gpdep.isEmpty)
+    assert(akNorm == 0.0)
+    val (am, amNorm) = gp("a->m")
+    assert(am == PdepStats(Fd(Seq("a"), "m"), 0L, None, None, None, None) && amNorm == 0.0)
+    // the single-FD path (fdCounts + the same aggregation) agrees
+    for (fd <- gp7Fds) {
+      val s = Pdep.stats(gp7, gp7Errors, "row_id", fd)
+      val p = gp(fd.key)._1
+      assert(s.n == p.n && s.epdep.isDefined == p.epdep.isDefined, fd.key)
+      for ((x, y) <- Seq(s.pdepB -> p.pdepB, s.pdepAB -> p.pdepAB, s.epdep -> p.epdep, s.gpdep -> p.gpdep))
+        assert(x.zip(y).forall { case (u, v) => math.abs(u - v) < 1e-12 }, fd.key)
+    }
+  }
+
+  test("shared pair-count lookup == per-FD fdCounts lookup, and emits fd + vicinity-1 together") {
+    val gp = Pdep.gpdepTable(gp7, gp7Errors, "row_id", gp7Fds)
+    val intoC = gp7Fds.filter(_.rhs == "c")
+    // the per-FD path: error rows of the rhs joined with the FD's own
+    // row-masked counts, norm_gpdep summed per candidate across FDs
+    val expected = intoC
+      .map { fd =>
+        gp7
+          .join(gp7Errors.filter(col("col") === fd.rhs).select("row_id"), "row_id")
+          .select(col("row_id") +: fd.lhs.map(col): _*)
+          .join(
+            Pdep.fdCounts(gp7, gp7Errors, "row_id", fd).drop("lhs_cnt").withColumnRenamed(fd.rhs, "candidate"),
+            fd.lhs
+          )
+          .select(col("row_id"), col("candidate"), lit(gp(fd.key)._2).as("score"))
+      }
+      .reduce(_ unionByName _)
+      .groupBy("row_id", "candidate")
+      .agg(sum("score").as("score"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("row_id"), col("candidate"), round(col("score"), 9))
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+        .toSet
+    // row 6: a=y -> v (0.3), b=r has no unmasked rows; row 7: a=x -> u
+    // (0.3), b=q -> u, v (0.7 each)
+    assert(rows(expected) == Set((6L, "v", 0.3), (7L, "u", 1.0), (7L, "v", 0.7)))
+    val fdSugg = Correctors.fdCorrector(gp7, gp7Errors, "row_id", gp, intoC)
+    assert(rows(fdSugg) == rows(expected))
+
+    val cols = Seq("a", "b", "c", "k", "m")
+    val both = Correctors
+      .pairCorrectors(
+        gp7,
+        gp7Errors,
+        "row_id",
+        cols,
+        Correctors.allCounts(gp7, gp7Errors, "row_id", cols),
+        intoC.map(fd => fd -> gp(fd.key)._2),
+        vicinity1 = true
+      )
+      .cache()
+    assert(rows(both.filter(col("corrector") === "fd")) == rows(expected))
+    val vicinity = Correctors.vicinityCorrectorOrder1(gp7, gp7Errors, "row_id", cols)
+    val vic = both.filter(col("corrector") =!= "fd")
+    assert(vic.exceptAll(vicinity).isEmpty && vicinity.exceptAll(vic).isEmpty)
+    both.unpersist()
   }
 }
